@@ -30,6 +30,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def _registries():
+    import importlib
+
     from parallelutilities_jl_spark.plans import queries as plan_q
     from parallelutilities_jl_spark.operators import relational
 
@@ -37,40 +39,17 @@ def _registries():
         (plan_q.QUERIES, plan_q.oracle_queries()),
         (relational.QUERIES, relational.ORACLES),
     ]
-    for name in ("mapreduce", "reductions", "dedup", "similarity", "text",
-                 "multimodal", "joins", "pipeline", "clustering",
-                 "sketches", "layout", "retrieval"):
-        try:
-            import importlib
-
-            m = importlib.import_module(
-                f"parallelutilities_jl_spark.operators.{name}"
-            )
-            mods.append((getattr(m, "QUERIES", {}), getattr(m, "ORACLES", {})))
-        except ImportError:
-            continue
-    try:
-        from parallelutilities_jl_spark.streaming import windows as sw
-
-        mods.append((getattr(sw, "QUERIES", {}), getattr(sw, "ORACLES", {})))
-    except ImportError:
-        pass
-    try:
-        from parallelutilities_jl_spark.streaming import stateful as sst
-
-        mods.append(
-            (getattr(sst, "QUERIES", {}), getattr(sst, "ORACLES", {}))
-        )
-    except ImportError:
-        pass
-    try:
-        from parallelutilities_jl_spark.streaming import sinks as ssk
-
-        mods.append(
-            (getattr(ssk, "QUERIES", {}), getattr(ssk, "ORACLES", {}))
-        )
-    except ImportError:
-        pass
+    # an import error raises: swallowing it would silently drop a whole
+    # family of heads from queries()
+    for name in ("operators.mapreduce", "operators.reductions",
+                 "operators.dedup", "operators.similarity", "operators.text",
+                 "operators.multimodal", "operators.joins",
+                 "operators.pipeline", "operators.clustering",
+                 "operators.sketches", "operators.layout",
+                 "operators.retrieval", "streaming.windows",
+                 "streaming.stateful", "streaming.sinks"):
+        m = importlib.import_module(f"parallelutilities_jl_spark.{name}")
+        mods.append((m.QUERIES, m.ORACLES))
     return mods
 
 

@@ -35,6 +35,7 @@ import shutil
 import tempfile
 import uuid
 
+from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -1494,8 +1495,10 @@ def _cc_spill_dir(spark: SparkSession) -> tuple[str, bool]:
 
 def _rm_spill(spark: SparkSession, path: str, is_local: bool) -> None:
     """Remove the spill dir — Hadoop FS delete for checkpoint-dir
-    locations (may be remote), shutil for the local tempdir. Cleanup
-    never raises: it must not mask the error that aborted the loop."""
+    locations (may be remote), shutil for the local tempdir. A failed
+    JVM-side delete (`Py4JError`, the base of `Py4JJavaError`) is
+    swallowed: it must not mask the error that aborted the loop. Any
+    other exception is a bug here and raises."""
     if is_local:
         shutil.rmtree(path, ignore_errors=True)
         return
@@ -1506,7 +1509,7 @@ def _rm_spill(spark: SparkSession, path: str, is_local: bool) -> None:
             spark.sparkContext._jsc.hadoopConfiguration()
         )
         fs.delete(p, True)
-    except Exception:
+    except Py4JError:
         pass
 
 

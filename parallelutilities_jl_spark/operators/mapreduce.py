@@ -41,6 +41,7 @@ from parallelutilities_jl_spark.operators.reductions import (
 )
 from parallelutilities_jl_spark.plans.dataframe import product_df, zip_df
 from parallelutilities_jl_spark.plans.productsplit import ProductSpec, ProductSplit
+from parallelutilities_jl_spark.session import ensure_package_on_executors
 from parallelutilities_jl_spark.sources.ranges import RangeSpec
 
 
@@ -198,8 +199,6 @@ def map_product_splits(
     Arrow-batched `applyInPandas` keyed by the *logical* rank column, so
     the physical partitioning is free to differ (AQE may coalesce) while
     rank semantics stay exact."""
-    from parallelutilities_jl_spark.session import ensure_package_on_executors
-
     ensure_package_on_executors(spark)
     df = product_df(spark, spec, np=np)
 
@@ -270,11 +269,14 @@ def _check_int_headroom(v) -> None:
     """Narrow-integer wrap guard (round-16 advisor): a caller that
     accumulates in an integer dtype promises its sums fit — but
     `np.add(..., out=...)` wraps silently, so a broken promise would
-    produce wrong sums with no error anywhere. Verify the folded
-    chunk's extrema sit inside HALF the dtype's range: every correct
-    intermediate then has headroom for one more add, while a wrap
-    almost always lands near the boundaries and trips this. Float
-    accumulations (inf-safe by IEEE saturation semantics) skip it."""
+    produce wrong sums with no error anywhere. The dense-elsum folds
+    call this on every partial they start from and after every add, so
+    each add starts from an accumulator whose extrema sit inside HALF
+    the dtype's range. Adding any value of the dtype to such an
+    accumulator either fits or wraps to outside that half range, so the
+    check trips on the very add that wrapped. Float accumulations
+    (inf-safe by IEEE saturation semantics) return before any pass over
+    the data."""
     import numpy as np
 
     if v.size == 0 or not np.issubdtype(v.dtype, np.integer):
@@ -317,6 +319,7 @@ def pmapreduce_dense_elsum(
     builds by hand (reference src/trees.jl:42-137)."""
     import numpy as np
 
+    ensure_package_on_executors(spark)
     sc = spark.sparkContext
     n_parts = num_partitions or min(n_tasks, sc.defaultParallelism)
     n_chunks = n_chunks or n_parts
@@ -326,6 +329,7 @@ def pmapreduce_dense_elsum(
         for i in it:
             m = make_array(i)
             acc = np.asarray(m) if acc is None else np.add(acc, m, out=acc)
+            _check_int_headroom(acc)
         if acc is None:
             return
         shape = acc.shape
@@ -348,10 +352,9 @@ def pmapreduce_dense_elsum(
                 acc[k] = (shape, v)
             else:
                 pv = prev[1]
-                out = pv if pv.flags.writeable else v
-                acc[k] = (shape, np.add(pv, v, out=out))
-        for k, (shape, v) in acc.items():
-            _check_int_headroom(v)
+                out = np.add(pv, v, out=pv if pv.flags.writeable else v)
+                _check_int_headroom(out)
+                acc[k] = (shape, out)
         return iter(acc.items())
 
     parts = (
@@ -398,6 +401,7 @@ def pmapreduce_dense_elsum_long(
     but bounds the result by driver memory; this one does not."""
     import numpy as np
 
+    ensure_package_on_executors(spark)
     sc = spark.sparkContext
     n_parts = num_partitions or min(n_tasks, sc.defaultParallelism)
     n_chunks = n_chunks or n_parts
@@ -407,6 +411,7 @@ def pmapreduce_dense_elsum_long(
         for i in it:
             m = make_array(i)
             acc = np.asarray(m) if acc is None else np.add(acc, m, out=acc)
+            _check_int_headroom(acc)
         if acc is None:
             return
         flat = acc.reshape(-1)
@@ -427,12 +432,9 @@ def pmapreduce_dense_elsum_long(
                 # deserialized chunks can arrive read-only; if pv is not
                 # writeable, allocate (v may be read-only too — writing
                 # into it would raise)
-                if pv.flags.writeable:
-                    acc[k] = (start, np.add(pv, v, out=pv))
-                else:
-                    acc[k] = (start, pv + v)
-        for k, (start, v) in acc.items():
-            _check_int_headroom(v)
+                out = np.add(pv, v, out=pv) if pv.flags.writeable else pv + v
+                _check_int_headroom(out)
+                acc[k] = (start, out)
         return iter(acc.items())
 
     folded = (

@@ -9,6 +9,17 @@ Local-mode defaults mirror what we would set on a real cluster:
 * Arrow enabled for every Pandas-UDF exchange.
 * Session timezone pinned to UTC so timestamp semantics match the DuckDB
   oracle.
+* Python call-site capture off:
+  `spark.python.sql.dataFrameDebugging.enabled=false`. PySpark 4
+  otherwise wraps every `functions.*` and `Column` call in about four
+  extra py4j round trips to record the Python call site for error
+  messages, and a query build makes hundreds to thousands of such
+  calls. Failures still raise the same JVM error with its SQL context;
+  only the Python call-site annotation is gone. PySpark reads the
+  option once per process, on the first wrapped call made with an
+  active session, and caches it. To get call sites back, pass
+  ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``
+  to `get_spark`.
 """
 
 from __future__ import annotations
@@ -42,6 +53,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         # Parquet scans: pushdown + pruning are on by default; keep split
@@ -100,6 +112,7 @@ _RUNTIME_CONF = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 
@@ -110,7 +123,11 @@ def tune_runtime(spark: SparkSession) -> SparkSession:
     default-config session it turns on AQE partition coalescing and
     rights-sizes `shuffle.partitions` to the session's core count — at
     small scale factors Spark's 200-partition default makes every
-    exchange latency-bound (200 near-empty tasks per shuffle)."""
+    exchange latency-bound (200 near-empty tasks per shuffle).
+
+    Turning off Python call-site capture here is best effort: PySpark
+    caches that option per process the first time it reads it, so a
+    process that already built a Column under the capture keeps it."""
     if getattr(spark, "_pu_tuned", False):
         return spark
     conf = dict(_RUNTIME_CONF)

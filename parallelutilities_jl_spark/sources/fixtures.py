@@ -4,6 +4,27 @@ The reference has no file formats or connectors — its "scans" are lazy
 task-set constructors (reference src/mapreduce.jl:18-38). Hosting the
 engine on Spark makes parquet the native scan: columnar, predicate
 pushdown, column pruning, partition pruning all come from Catalyst.
+
+Schema cache. A bare `spark.read.parquet(file)` runs a Spark job
+(`mergeSchemasInParallel`) only to learn the file's schema, and every
+query build pays it again for every table it reads. `load_table` pays
+it once per file per session, the way the reference answers split
+metadata on the caller without asking a worker (reference
+`ProductSplit`):
+
+* miss: the first read is the plain `spark.read.parquet(path)`, and its
+  inferred `StructType` is stored on the `SparkSession` object;
+* hit: every later read is `spark.read.schema(cached).parquet(path)`,
+  which starts no job.
+
+Only the schema is cached, never a DataFrame, so each call still builds
+a fresh relation with fresh attribute ids and self-joins resolve as
+before. The key is the file's real path, its parquet footer bytes (read
+with plain file I/O, so a file rewritten at the same path misses
+exactly) and the values of the confs that change parquet inference
+(`_INFERENCE_CONFS`). Directories (Spark-written tables) and non-local
+URIs are not cached and take the plain read. A new session starts with
+an empty cache.
 """
 
 from __future__ import annotations
@@ -56,6 +77,54 @@ BROADCASTABLE = {"region", "nation", "supplier", "part", "customer"}
 EVAL_SOURCE = "src0"
 
 
+# confs whose values change the schema parquet inference returns
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+
+def _parquet_footer(path: str) -> bytes | None:
+    """Footer of a local parquet file: the Thrift file metadata, its
+    4-byte length and the closing ``PAR1`` magic. None when ``path`` is
+    not a readable parquet file (a directory, a URI, a truncated file)."""
+    try:
+        with open(path, "rb") as f:
+            f.seek(-8, os.SEEK_END)
+            tail = f.read(8)
+            if tail[4:] != b"PAR1":
+                return None
+            f.seek(-8 - int.from_bytes(tail[:4], "little"), os.SEEK_END)
+            return f.read()
+    except OSError:
+        return None
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """`spark.read.parquet(path)` through the session's schema cache
+    (module docstring). Two racing misses both infer and store the same
+    schema, so no lock is needed."""
+    footer = _parquet_footer(path)
+    if footer is None:
+        return spark.read.parquet(path)
+    key = (
+        os.path.realpath(path),
+        footer,
+        tuple(spark.conf.get(k) for k in _INFERENCE_CONFS),
+    )
+    cache = getattr(spark, "_pu_parquet_schemas", None)
+    if cache is None:
+        cache = spark._pu_parquet_schemas = {}
+    schema = cache.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    cache[key] = df.schema
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown fixture table {name!r}; one of {TABLES}")
@@ -68,13 +137,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         from pyspark.sql import functions as F
 
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
+        df = _read_parquet(spark, path)
         if dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn(
                 "ts", F.timestamp_micros(F.expr("ts div 1000"))
             )
         return df
-    return spark.read.parquet(path)
+    return _read_parquet(spark, path)
 
 
 def load_table_parallel(

@@ -274,3 +274,40 @@ def test_components_partitioning_invariance(spark):
     finally:
         dedup._CC_CONTRACT_MIN_ROWS = old_gate
         dedup._CC_TINY_MAX_ROWS = old_tiny
+
+
+def _spark_whose_delete_raises(exc):
+    """Stand-in session whose Hadoop FS delete raises ``exc``."""
+    from types import SimpleNamespace
+
+    class FileSystem:
+        def delete(self, path, recursive):
+            raise exc
+
+    class HadoopPath:
+        def __init__(self, path):
+            pass
+
+        def getFileSystem(self, conf):
+            return FileSystem()
+
+    fs = SimpleNamespace(Path=HadoopPath)
+    jvm = SimpleNamespace(
+        org=SimpleNamespace(apache=SimpleNamespace(hadoop=SimpleNamespace(fs=fs)))
+    )
+    jsc = SimpleNamespace(hadoopConfiguration=lambda: None)
+    return SimpleNamespace(sparkContext=SimpleNamespace(_jvm=jvm, _jsc=jsc))
+
+
+def test_rm_spill_swallows_only_jvm_errors():
+    # a failed JVM-side delete must not mask the error that aborted the
+    # CC loop; a Python bug in the cleanup itself must surface
+    from py4j.protocol import Py4JError
+
+    from parallelutilities_jl_spark.operators.dedup import _rm_spill
+
+    _rm_spill(_spark_whose_delete_raises(Py4JError("delete failed")),
+              "hdfs://nn/ckpt/pu_cc_spill_x", False)
+    with pytest.raises(TypeError):
+        _rm_spill(_spark_whose_delete_raises(TypeError("bug")),
+                  "hdfs://nn/ckpt/pu_cc_spill_x", False)

@@ -354,3 +354,58 @@ def test_reducer_error_propagates_through_task_failure(spark):
         pmapreduce_rdd(df, lambda r: r.v, bad_reduce, depth=2)
     msg = str(excinfo.value)
     assert "boom from reducer" in msg
+
+
+@pytest.mark.parametrize("twin", ["collect", "long"])
+def test_dense_elsum_ships_package(spark, monkeypatch, twin):
+    # the dense-elsum folds close over this package's headroom guard, so
+    # executors must be able to import it whatever the caller's cwd
+    import numpy as np
+
+    from parallelutilities_jl_spark.operators.mapreduce import (
+        pmapreduce_dense_elsum,
+        pmapreduce_dense_elsum_long,
+    )
+
+    sc = spark.sparkContext
+    monkeypatch.delattr(sc, "_pu_pkg_shipped", raising=False)
+    if twin == "collect":
+        out = pmapreduce_dense_elsum(spark, 2, lambda i: np.ones(3))
+        assert out.tolist() == [2.0, 2.0, 2.0]
+    else:
+        df = pmapreduce_dense_elsum_long(spark, 2, lambda i: np.ones(3))
+        assert sorted(r.value for r in df.collect()) == [2.0, 2.0, 2.0]
+    assert sc._pu_pkg_shipped is True
+
+
+@pytest.mark.parametrize("twin", ["collect", "long"])
+@pytest.mark.parametrize("num_partitions", [1, 4])
+def test_dense_elsum_int_wrap_raises(spark, twin, num_partitions):
+    # four int8 partials of 60 sum to 240, which wraps to -16: inside the
+    # half-range band, so a guard run only on the folded chunk passes it.
+    # One partition adds all four in part_chunks; four partitions add
+    # them in fold_chunks. Either way the add that leaves the band raises.
+    import numpy as np
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors.exceptions.captured import PythonException
+
+    from parallelutilities_jl_spark.operators.mapreduce import (
+        pmapreduce_dense_elsum,
+        pmapreduce_dense_elsum_long,
+    )
+
+    def make(i):
+        return np.full(4, 60, dtype=np.int8)
+
+    with pytest.raises((PythonException, Py4JJavaError)) as ei:
+        if twin == "collect":
+            pmapreduce_dense_elsum(
+                spark, 4, make, num_partitions=num_partitions
+            )
+        else:
+            pmapreduce_dense_elsum_long(
+                spark, 4, make, num_partitions=num_partitions,
+                ship_dtype=np.int8,
+            ).collect()
+    assert "OverflowError" in str(ei.value)
+    assert "headroom" in str(ei.value)

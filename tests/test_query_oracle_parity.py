@@ -39,3 +39,15 @@ def test_every_query_has_oracle_or_is_flagged():
     oracles = entrymod.oracle_sql()
     missing = set(oracles) - set(qs)
     assert not missing, f"oracle_sql for unknown queries: {missing}"
+
+
+def test_registry_import_failure_raises(monkeypatch):
+    # a module that fails to import must fail queries(), not silently
+    # drop its whole family of heads
+    import sys
+
+    monkeypatch.setitem(
+        sys.modules, "parallelutilities_jl_spark.operators.sketches", None
+    )
+    with pytest.raises(ImportError):
+        entrymod.queries()
